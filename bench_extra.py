@@ -119,13 +119,13 @@ def plan_frames(spark):
         return connected_components(_events_graph(spark))
 
     def tri_full():
+        from ligra_spark.algorithms._tier import resolve_tier
         from ligra_spark.algorithms.closed import _tri_kernel
 
         rg = Graph(
             rmat_graph_df(spark, 17, 500_000), dedupe=True, num_partitions=CPUS
         )
-        _ = rg.m
-        if not rg.fits_local_kernel():
+        if resolve_tier(rg, "triangle").tier != "local":
             return None
         return (
             rg.local_view()

@@ -8,25 +8,29 @@ re-enters the frontier iff its label changed this round
 (Components.C:62-67). At fixpoint every vertex holds the **minimum
 vertex id of its component** — an exact, deterministic output.
 
-Acceleration (identical fixpoint, far fewer rounds):
+Acceleration (identical fixpoint, far fewer rounds), both in every
+round of the distributed loop:
 
-- ``contract=True`` adds per-round **group-min contraction**: every
-  vertex whose *old* label was L adopts the best label discovered by
-  anyone in L's group this round (``groupBy(comp).min`` + join back) —
-  the star-contraction idea from the MapReduce-WCC literature. Plain
-  hash-min needs O(diameter) rounds (ruinous on 10^12-turn
-  conversation chains, where per-round Spark job overhead dominates);
-  contraction empirically converges in O(log) rounds on the transcript
-  graphs (6 rounds vs 40 at sf0.01) and each extra step is
-  label-table-sized, never edge-sized.
-- ``jumps`` chained pointer-jump hops per round
-  (``IDs[i] = IDs[IDs[i]]``, Components-Shortcut.C:30-42); hops are
-  materialized individually — a lazily chained k-hop plan would embed
-  2^k copies of the relax subplan (each self-join doubles the tree).
+- **group-min contraction**: every vertex whose *old* label was L
+  adopts the best label discovered by anyone in L's group this round
+  (``groupBy(comp).min`` + join back) — the star-contraction idea from
+  the MapReduce-WCC literature. Plain hash-min needs O(diameter) rounds
+  (ruinous on 10^12-turn conversation chains, where per-round Spark job
+  overhead dominates); contraction empirically converges in O(log)
+  rounds on the transcript graphs (6 rounds vs 40 at sf0.01) and each
+  extra step is label-table-sized, never edge-sized.
+- **two pointer-jump hops** (``IDs[i] = IDs[IDs[i]]``,
+  Components-Shortcut.C:30-42); hops are materialized individually — a
+  lazily chained k-hop plan would embed 2^k copies of the relax subplan
+  (each self-join doubles the tree). Measured on the sf0.1 events
+  chains at local[32]: one hop 7 rounds / 7.3s, two hops 5 rounds /
+  6.8s, three hops 4 rounds / 6.1s — but each hop is an extra
+  vertex-sized materialization per round, and short-diameter graphs
+  (rMat: 4 rounds at any hop count) pay it for nothing, so two is the
+  balance.
 
-``shortcut=True`` is the single-hop Components-Shortcut.C behavior
-(kept for parity testing). All variants produce byte-identical final
-labels; only round counts differ.
+Schedules only change round counts; the final labels are the
+Components.C fixpoint either way.
 """
 
 from __future__ import annotations
@@ -35,52 +39,45 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms._tier import resolve_tier
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
+
+# pointer-jump hops per round (module docstring)
+JUMPS = 2
 
 
 def connected_components(
     graph: Graph,
     symmetrize: bool = True,
-    shortcut: bool = False,
-    jumps: int | None = None,
-    contract: bool = True,
     max_iters: int = 1000,
     metrics: IterMetrics | None = None,
     checkpointer=None,
 ) -> DataFrame:
-    """Returns ``(id LONG, comp LONG)`` — comp = min id in component."""
-    if jumps is None:
-        # contract default 2 (was 1), measured on the sf0.1 events
-        # chains at local[32]: rounds 7→5 and wall 7.3→6.8s (jumps=3:
-        # 4 rounds / 6.1s but each hop is an extra vertex-sized
-        # materialization per round — on short-diameter graphs (rMat:
-        # 4 rounds at any jump count) extra hops are pure cost, so 2
-        # is the balance). shortcut stays 1 = Components-Shortcut.C
-        # parity.
-        jumps = (1 if shortcut else 2) if (shortcut or contract) else 0
-    if (
-        checkpointer is None
-        and max_iters >= 1000  # kernel runs to fixpoint; a smaller cap
-        # is a request for PARTIAL labels the kernel cannot honor
-        and (symmetrize or graph.symmetric)
-        and getattr(graph, "closed_edges", None) is None
-        and graph.fits_local_kernel()
-    ):
-        # Whole-graph local dispatch (graph.py:_LocalClosedView): one
-        # Shiloach–Vishkin Arrow pass over the single-partition edge
-        # set replaces the multi-round hash-min loop (each round ~0.5s
-        # of driver orchestration at small scale). Output is the
-        # identical min-id fixpoint — the kernel is direction-agnostic,
-        # exactly the symmetrized semantics this branch requires.
-        # shortcut/jumps/contract only change round schedules, never
-        # the labels (module docstring), so all variants share this
-        # dispatch.
+    """Returns ``(id LONG, comp LONG)`` — comp = min id in component.
+
+    ``resolve_tier`` sends plain graphs with ``m <=
+    LIGRA_LOCAL_GRAPH_EDGES`` to one Shiloach–Vishkin Arrow pass over
+    the whole graph as one partition (closed.py), which replaces the
+    multi-round loop (each round ~0.5s of driver orchestration at small
+    scale) with the identical min-id fixpoint. That kernel is
+    direction-agnostic and runs to the fixpoint, so checkpointed runs,
+    ``max_iters < 1000`` (partial labels) and directed hash-min
+    (``symmetrize=False`` on an asymmetric graph) keep the loop, as do
+    closure-keyed graphs (``cc_contract_local`` is their kernel)."""
+    tier, _, view = resolve_tier(
+        graph,
+        "cc",
+        checkpointer=checkpointer,
+        max_iters=max_iters,
+        symmetrize=symmetrize,
+    )
+    if tier != "distributed":
         from ligra_spark.algorithms.closed import (
             connected_components_closed,
         )
 
-        return connected_components_closed(graph.local_view(), metrics=metrics)
+        return connected_components_closed(view, metrics=metrics)
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
     state = g.vertices.select("id", F.col("id").alias("comp"))
@@ -107,29 +104,16 @@ def connected_components(
             "comp",
             F.least("comp", F.coalesce("msg", "comp")).alias("comp_new"),
         )
-        if contract:
-            grp = nxt.groupBy("comp").agg(F.min("comp_new").alias("gmin"))
-            nxt = nxt.join(grp, "comp").select(
-                "id", "comp", F.least("comp_new", "gmin").alias("comp_new")
-            )
-        # The frontier count rides the round's LAST materialization
-        # action as an observed metric (one driver job per round
-        # instead of two); attach it to whichever plan materializes
-        # last — nxt itself when jumps == 0, else the final jump.
-        obs = Observation(f"cc_frontier_{it}")
-
-        def _observe_frontier(df):
-            return df.observe(
-                obs,
-                F.sum(
-                    (F.col("comp_new") < F.col("comp")).cast("long")
-                ).alias("frontier_n"),
-            )
-
-        if jumps == 0:
-            nxt = _observe_frontier(nxt)
+        grp = nxt.groupBy("comp").agg(F.min("comp_new").alias("gmin"))
+        nxt = nxt.join(grp, "comp").select(
+            "id", "comp", F.least("comp_new", "gmin").alias("comp_new")
+        )
         nxt = materialize(nxt, state)
-        for j in range(jumps):
+        # The frontier count rides the round's LAST materialization
+        # action, the final jump, as an observed metric (one driver job
+        # per round instead of two).
+        obs = Observation(f"cc_frontier_{it}")
+        for j in range(JUMPS):
             hop = nxt.select(
                 F.col("id").alias("comp_new"), F.col("comp_new").alias("comp2")
             )
@@ -138,8 +122,13 @@ def connected_components(
                 "comp",
                 F.coalesce("comp2", "comp_new").alias("comp_new"),
             )
-            if j == jumps - 1:
-                jumped = _observe_frontier(jumped)
+            if j == JUMPS - 1:
+                jumped = jumped.observe(
+                    obs,
+                    F.sum(
+                        (F.col("comp_new") < F.col("comp")).cast("long")
+                    ).alias("frontier_n"),
+                )
             nxt = materialize(jumped, nxt)
         frontier = nxt.where(F.col("comp_new") < F.col("comp")).select(
             "id", F.col("comp_new").alias("comp")
@@ -203,7 +192,8 @@ def cc_contract_local(
     MapReduce and Beyond" — public literature), re-expressed as Arrow
     kernels + DataFrame aggregation."""
     if edges is None:
-        if getattr(graph, "closed_edges", None) is not None:
+        tier, _, view = resolve_tier(graph, "cc_contract")
+        if tier != "distributed":
             # declared closure: every component is inside one closure
             # group, so the single-pass closed kernel is exact — no
             # coupling rounds, no pair-stream sort-shuffle (closed.py)
@@ -211,7 +201,7 @@ def cc_contract_local(
                 connected_components_closed,
             )
 
-            return connected_components_closed(graph, metrics=metrics)
+            return connected_components_closed(view, metrics=metrics)
         edges = graph.edges_derived
     edges = edges.select("src", "dst")
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._tier import resolve_tier
 from ligra_spark.graph import Graph
 
 
@@ -40,29 +41,18 @@ def label_propagation(
     """Returns ``(id LONG, label LONG)`` after convergence or
     ``max_iters`` synchronous rounds.
 
-    Graphs with a declared closure key dispatch to the fused
-    partition-local kernel (closed.py): one Arrow pass, bit-identical
-    labels (a closed partition at a local fixpoint is fixed forever,
-    so per-partition early stop composes into the exact global
-    changed==0 stopping rule)."""
-    if getattr(graph, "closed_edges", None) is not None:
+    ``resolve_tier`` sends closure-keyed graphs and graphs with ``m <=
+    LIGRA_LOCAL_GRAPH_EDGES`` to the fused closed.py kernel (over the
+    closed partitions, or over the whole graph as one partition): one
+    Arrow pass, bit-identical labels (a closed partition at a local
+    fixpoint is fixed forever, so per-partition early stop composes
+    into the exact global changed==0 stopping rule)."""
+    tier, _, view = resolve_tier(graph, "lp")
+    if tier != "distributed":
         from ligra_spark.algorithms.closed import label_propagation_closed
 
         return label_propagation_closed(
-            graph,
-            max_iters=max_iters,
-            symmetrize=symmetrize and not graph.symmetric,
-            metrics=metrics,
-        )
-    if graph.fits_local_kernel():
-        # Whole-graph local dispatch (graph.py:_LocalClosedView): the
-        # closed LP kernel over the single-partition edge set yields
-        # bit-identical labels (deterministic mode + min tie-break,
-        # global changed==0 stop) with all rounds fused in one pass.
-        from ligra_spark.algorithms.closed import label_propagation_closed
-
-        return label_propagation_closed(
-            graph.local_view(),
+            view,
             max_iters=max_iters,
             symmetrize=symmetrize and not graph.symmetric,
             metrics=metrics,

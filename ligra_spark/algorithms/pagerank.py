@@ -33,6 +33,7 @@ from ligra_spark.algorithms._iter import (
     materialize,
     unpersist,
 )
+from ligra_spark.algorithms._tier import resolve_tier
 from ligra_spark.graph import Graph
 from ligra_spark.operators.vertex_ops import vertex_map
 
@@ -44,66 +45,25 @@ def pagerank(
     max_iters: int = 100,
     metrics: IterMetrics | None = None,
     checkpointer=None,
-    block: int = 1,
 ) -> DataFrame:
     """Returns ``(id LONG, rank DOUBLE)`` at convergence.
 
-    Graphs with a declared closure key (``Graph(closure_key=...)``,
-    e.g. the transcript link graph where no edge crosses a
-    conversation) dispatch to the fused partition-local kernel
-    (closed.py): zero per-iteration shuffle, identical output at rtol
-    1e-12 / same round count (pytest-pinned). Checkpointed runs stay
-    on the generic path (per-iteration checkpoint cadence contract).
-
-    ``block`` chains that many power iterations into ONE driver job /
-    checkpoint (superstep blocking): per-round L1 norms still ride the
-    job as per-iteration ``Observation``s, but plan analysis, task
-    launch and lineage truncation are paid once per block instead of
-    once per round. Output is EXACT for any ``block``: the rank update
-    is not idempotent, so if the L1 tolerance is crossed mid-block the
-    whole block is discarded and replayed from the block-start
-    checkpoint with exactly the converged number of rounds — the same
-    rounds as ``block=1``, ranks equal up to float-summation order
-    (pytest-pinned at rtol 1e-12).
-    Checkpointed runs force ``block=1`` (checkpoint cadence and resume
-    alignment are per-iteration by contract).
-
-    Default is 1 — MEASURED, not assumed: at sf0.1/local[32] (486k
-    edges, the regime where per-round fixed cost is the largest share
-    of wall) block=4 ran 27.8s vs 16-19s at block=1, and an idealized
-    single-state-reference variant with no per-round metrics showed no
-    gain at any block size either (19.6/80.0/18.6/21.2s for blocks
-    1/4/10/20) — on one box the round cost is the message shuffle and
-    state materialization, which blocking cannot remove, not the
-    driver barrier. The knob exists for multi-executor clusters, where
-    the per-round barrier is a driver round-trip times a 1000-executor
-    task launch — a latency floor the reference's shared-memory rounds
-    never pay (ligra.h:469-497) and that blocking divides by
-    ``block``; it cannot be evidenced in local mode (no per-job
-    scheduler RPC fan-out), so the default stays at the measured
-    optimum for the harness this repo can run."""
-    if getattr(graph, "closed_edges", None) is not None and checkpointer is None:
+    ``resolve_tier`` picks where it runs. Graphs with a declared
+    closure key (``Graph(closure_key=...)``, e.g. the transcript link
+    graph where no edge crosses a conversation) run the fused
+    partition-local kernel (closed.py), and graphs with ``m <=
+    LIGRA_LOCAL_GRAPH_EDGES`` run the same kernel over the whole graph
+    as one partition: all power iterations in one Arrow pass, identical
+    output at rtol 1e-12 with the same round count (pytest-pinned).
+    Larger graphs and checkpointed runs (checkpoint cadence is
+    per-iteration by contract) run the distributed loop below, one
+    driver job per round."""
+    tier, _, view = resolve_tier(graph, "pagerank", checkpointer=checkpointer)
+    if tier != "distributed":
         from ligra_spark.algorithms.closed import pagerank_closed
 
         return pagerank_closed(
-            graph, damping=damping, tol=tol, max_iters=max_iters, metrics=metrics
-        )
-    if checkpointer is None and graph.fits_local_kernel():
-        # Whole-graph local dispatch (graph.py:_LocalClosedView): the
-        # edge set fits one partition, so the closed PageRank kernel
-        # computes the exact global answer in ONE Arrow pass — all
-        # power iterations fused, no per-round driver jobs (the
-        # distributed loop measured >97% driver orchestration at this
-        # scale). Same rounds, same L1 stop, ranks equal up to float
-        # summation order (parity pytest-pinned for the closed path).
-        from ligra_spark.algorithms.closed import pagerank_closed
-
-        return pagerank_closed(
-            graph.local_view(),
-            damping=damping,
-            tol=tol,
-            max_iters=max_iters,
-            metrics=metrics,
+            view, damping=damping, tol=tol, max_iters=max_iters, metrics=metrics
         )
     n = graph.n
     if n == 0:
@@ -120,13 +80,12 @@ def pagerank(
         if resumed is not None:
             start_iter, st = resumed
             state = graph.degrees.select("id", "out_deg").join(st, "id")
-        block = 1
-    block = max(1, int(block))
     state = materialize(state)
 
-    def step(cur: DataFrame, tag: str) -> tuple[DataFrame, Observation]:
+    timer = Timer()
+    for it in range(start_iter, max_iters):
         contribs = (
-            cur.where(F.col("out_deg") > 0)
+            state.where(F.col("out_deg") > 0)
             .select("id", (F.col("rank") / F.col("out_deg")).alias("share"))
             .withColumnRenamed("id", "src")
             .join(graph.edges_by_src, "src")
@@ -136,84 +95,33 @@ def pagerank(
         # PR_Vertex_F (PageRank.C:44-56) as a vertex_map: the damped
         # rank update is a pure columnar expression over gathered state
         nxt = vertex_map(
-            cur.join(contribs, "id", "left"),
+            state.join(contribs, "id", "left"),
             {
                 "rank_next": F.lit(base)
                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
             },
         ).select("id", "out_deg", "rank", "rank_next")
         # Fold the L1 convergence norm into the SAME action that
-        # materializes the block (Observation metrics are collected
+        # materializes the round (Observation metrics are collected
         # as a side effect of the checkpoint job) — no extra driver
         # job per round. At bench scale the extra job was ~30% of the
         # per-iteration fixed cost; on a cluster it's a full scan of
         # the state table saved per round.
-        obs = Observation(tag)
+        obs = Observation(f"pr_l1_{it}")
         nxt = nxt.observe(
             obs, F.sum(F.abs(F.col("rank_next") - F.col("rank"))).alias("l1")
         )
-        return (
-            nxt.select("id", "out_deg", F.col("rank_next").alias("rank")),
-            obs,
+        nxt = materialize(
+            nxt.select("id", "out_deg", F.col("rank_next").alias("rank"))
         )
-
-    def run_block(start: DataFrame, blk: int, it0: int, gen: int):
-        """Chain ``blk`` iterations from ``start``; one materialization.
-
-        Each round's state feeds the next round TWICE (the contribs
-        scan and the rank-update join). Within a block the intermediate
-        rounds are plan-cached (lazy ``persist``) so both references
-        share one computation — measured: without it, exchange reuse
-        only partially dedups the doubled subtree and a 4-block runs
-        ~2x slower than 4 single rounds. The intermediates are released
-        only AFTER the block's end state is RDD-checkpointed, so the
-        round-1 unpersist-cascade pitfall (cascading drop of a *plan*-
-        cached dependent, see materialize()) cannot bite: nothing live
-        references the intermediates once the block end is RDD-backed.
-        """
-        cur, obses, cached = start, [], []
-        for j in range(blk):
-            cur, obs = step(cur, f"pr_l1_{it0 + j}_g{gen}")
-            obses.append(obs)
-            if j < blk - 1:
-                cur = cur.persist()
-                cached.append(cur)
-        cur = materialize(cur)  # block start stays persisted (replay)
-        for c in cached:
-            c.unpersist()
-        return cur, [float(o.get["l1"] or 0.0) for o in obses]
-
-    timer = Timer()
-    it, gen = start_iter, 0
-    while it < max_iters:
-        blk = min(block, max_iters - it)
-        nxt, l1s = run_block(state, blk, it, gen)
-        hit = next((j for j, v in enumerate(l1s) if v < tol), None)
-        if hit is not None and hit < blk - 1:
-            # tolerance crossed mid-block: the block-end state has
-            # extra iterations applied — discard and replay exactly
-            # ``hit + 1`` rounds so the result matches block=1 rounds.
-            unpersist(nxt)
-            gen += 1
-            blk = hit + 1
-            nxt, l1s = run_block(state, blk, it, gen)
-            hit = blk - 1
         unpersist(state)
         state = nxt
+        l1 = float(obs.get["l1"] or 0.0)
         if metrics is not None:
-            wall = timer.lap()
-            for j in range(blk):
-                # wall is measured per BLOCK (one job); amortized
-                # evenly across its rounds for the per-iteration log
-                metrics.record(
-                    it + j, l1=l1s[j], wall_s=wall / blk, edges=graph.m
-                )
-        if checkpointer is not None:  # blk == 1 by construction
-            checkpointer.save(
-                it, state.select("id", "rank"), {"l1": l1s[-1]}
-            )
-        it += blk
-        if hit is not None:
+            metrics.record(it, l1=l1, wall_s=timer.lap(), edges=graph.m)
+        if checkpointer is not None:
+            checkpointer.save(it, state.select("id", "rank"), {"l1": l1})
+        if l1 < tol:
             break
     return state.select("id", "rank")
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ligra_spark.algorithms._tier import resolve_tier
 from ligra_spark.graph import Graph
 
 
@@ -98,13 +99,14 @@ def triangle_count(graph: Graph) -> int:
     exchange reuse does not reliably cover all three."""
     from ligra_spark.algorithms._iter import materialize, unpersist
 
-    if getattr(graph, "closed_edges", None) is not None:
+    tier, _, view = resolve_tier(graph, "triangle")
+    if tier == "closed":
         # closure-key dispatch (closed.py): triangles never cross a
         # closure partition, so the count is one Arrow pass, no joins
         from ligra_spark.algorithms.closed import triangle_count_closed
 
-        return triangle_count_closed(graph)
-    if graph.fits_local_kernel():
+        return triangle_count_closed(view)
+    if tier == "local":
         # Whole-graph local dispatch, parallel variant: the coalesce(1)
         # closed kernel put the whole wedge enumeration on ONE core
         # (measured 0.88 s in-kernel for the 487k-edge rMat bench graph
@@ -113,7 +115,7 @@ def triangle_count(graph: Graph) -> int:
         # cap, ≤32 MB at the 2M default) and runs on the driver; the
         # wedge probe — the actual work — fans out across the session's
         # cores against a broadcast of the oriented arrays.
-        return _triangle_count_local_parallel(graph)
+        return _triangle_count_local_parallel(view)
     ep = materialize(_oriented_edges(graph))
     n = _closed_wedges(ep).count()
     unpersist(ep)
@@ -224,10 +226,11 @@ def triangles_per_vertex(graph: Graph) -> DataFrame:
     Graph is built here either."""
     from ligra_spark.algorithms._iter import materialize
 
-    if getattr(graph, "closed_edges", None) is not None:
+    tier, _, view = resolve_tier(graph, "triangles_per_vertex")
+    if tier == "closed":
         from ligra_spark.algorithms.closed import triangles_per_vertex_closed
 
-        return triangles_per_vertex_closed(graph)
+        return triangles_per_vertex_closed(view)
     ep = materialize(_oriented_edges(graph))
     tri = _closed_wedges(ep)
     corners = (

@@ -30,38 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-# Graphs at or under this many edges dispatch iterative algorithms to
-# the fused single-partition Arrow kernels (the closed.py kernels over
-# the trivial whole-graph closure) instead of the distributed fixpoint
-# loops. Rationale (measured, sf0.1 events graph = 98.5k edges,
-# local[32]): a distributed fixpoint round costs ~0.45-0.5s of pure
-# driver orchestration — ~5 scheduler jobs + Catalyst planning + AQE
-# stage materialization + a localCheckpoint — while its 32 cores are
-# >97% idle (sum of executor task time across a full 20-round PageRank:
-# 9.2s on 32 cores = 0.29s busy-equivalent vs 12.4s wall). A
-# single-worker numpy kernel sustains ~30-60M edge-updates/s, so any
-# graph under a few million edges finishes ALL rounds in under a
-# second, beating the per-round floor by an order of magnitude. The
-# threshold is deliberately conservative (kernel wall ≲1s, worker
-# memory ≲100 MB) and env-tunable: a real cluster tunes it by its own
-# scheduler floor; 0 disables the dispatch (bench_scaling sets 0 so the
-# distributed engine's scaling is what gets measured).
-DEFAULT_LOCAL_KERNEL_EDGES = 2_000_000
-
-
-def local_kernel_edge_cap() -> int:
-    import os
-
-    try:
-        return int(
-            os.environ.get(
-                "LIGRA_LOCAL_GRAPH_EDGES", DEFAULT_LOCAL_KERNEL_EDGES
-            )
-        )
-    except ValueError:
-        return DEFAULT_LOCAL_KERNEL_EDGES
-
-
 class _LocalClosedView:
     """Single-partition closed view of a small graph: the whole edge set
     coalesced into ONE partition is trivially closure-partitioned (every
@@ -350,30 +318,10 @@ class Graph:
                 "kernels would be wrong"
             )
 
-    def fits_local_kernel(self) -> bool:
-        """True when the edge set is small enough for the fused
-        single-partition kernel dispatch (see ``_LocalClosedView`` /
-        ``DEFAULT_LOCAL_KERNEL_EDGES``). Costs one count job if ``m``
-        was never computed."""
-        cap = local_kernel_edge_cap()
-        return cap > 0 and self.m <= cap
-
     def local_view(self) -> "_LocalClosedView":
-        """Single-partition closed view for the local-kernel dispatch."""
+        """Single-partition closed view for the local-kernel dispatch
+        (``algorithms._tier.resolve_tier``)."""
         return _LocalClosedView(self)
-
-    def csr_blocks(self) -> DataFrame:
-        """Partition-local CSR blocks in Arrow batches (built lazily,
-        persisted) — the dense-pull substrate for
-        ``edge_map(direction='pull')``; see csr.py."""
-        if getattr(self, "_csr_blocks", None) is None:
-            from ligra_spark.csr import build_csr_blocks
-
-            self._csr_blocks = build_csr_blocks(
-                self.edges_by_src, self.num_partitions
-            )
-            self._csr_blocks.count()
-        return self._csr_blocks
 
     # -- derived graphs ---------------------------------------------------
     def symmetrized(self) -> "Graph":
@@ -454,7 +402,5 @@ class Graph:
         ):
             if df is not None:
                 df.unpersist()
-        if getattr(self, "_csr_blocks", None) is not None:
-            self._csr_blocks.unpersist()
         if self._edges_ckpt is not None:
             _unp(self._edges_ckpt)

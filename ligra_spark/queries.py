@@ -43,7 +43,6 @@ from ligra_spark.algorithms import (
     triangle_count,
     triangles_per_vertex,
 )
-from ligra_spark.csr import pagerank_csr
 from ligra_spark.functions.dedup import (
     dedup_clusters,
     dedup_exact,
@@ -133,10 +132,9 @@ FROM v LEFT JOIN o ON v.id = o.id LEFT JOIN i ON v.id = i.id
 
 
 def q_cc_events(spark, sf_dir):
-    """Full iterative hash-min CC (with pointer-jump shortcutting) on
-    the event-chain graph; the oracle's closed form holds because each
-    user's events form one path component."""
-    return connected_components(_events_graph(spark, sf_dir), shortcut=True)
+    """Full CC on the event-chain graph; the oracle's closed form holds
+    because each user's events form one path component."""
+    return connected_components(_events_graph(spark, sf_dir))
 
 
 CC_EVENTS_SQL = """
@@ -1627,16 +1625,6 @@ def q_pagerank_delta_iter1_events(spark, sf_dir):
     )
 
 
-def q_pagerank_csr_iter1_events(spark, sf_dir):
-    """One round through the Arrow CSR SpMV kernel (partition-local
-    gather-scatter) — verifies the dense-pull substrate value-for-value
-    against the same DuckDB closed form as the join plan."""
-    g = _events_graph(spark, sf_dir)
-    return pagerank_csr(g, max_iters=1).select(
-        "id", _round_rank(F.col("rank")).alias("rank")
-    )
-
-
 # --------------------------------------------------------------------------
 # documents: text analysis + dedup
 # --------------------------------------------------------------------------
@@ -2767,7 +2755,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "hyper_mis_events": q_hyper_mis_events,
     "tri_vertex_mod": q_tri_vertex_mod,
     "pagerank_delta_iter1_events": q_pagerank_delta_iter1_events,
-    "pagerank_csr_iter1_events": q_pagerank_csr_iter1_events,
     "dedup_exact_docs": q_dedup_exact_docs,
     "fingerprint_docs": q_fingerprint_docs,
     "token_count_docs": q_token_count_docs,
@@ -2906,7 +2893,6 @@ ORACLE_SQL: dict[str, str] = {
     "clrstv_ecc_mod": CLRSTV_ECC_MOD_SQL,
     "tri_vertex_mod": TRI_VERTEX_MOD_SQL,
     "pagerank_delta_iter1_events": PAGERANK_ITER1_SQL,
-    "pagerank_csr_iter1_events": PAGERANK_ITER1_SQL,
     "dedup_exact_docs": DEDUP_EXACT_SQL,
     "fingerprint_docs": FINGERPRINT_SQL,
     "token_count_docs": TOKEN_COUNT_SQL,

@@ -18,7 +18,7 @@ from ligra_spark.sources.rmat import rmat_graph_df
 RMAT_W = "/root/reference/inputs/rMatGraph_WJ_5_100"
 
 
-@pytest.mark.skipif(not os.path.exists(RMAT_W), reason="reference inputs absent")
+@pytest.mark.skipif(not os.path.exists(RMAT_W), reason=f"golden input {RMAT_W} absent")
 def test_delta_stepping_matches_bellman_ford_golden(spark):
     edges_df = read_adjacency_graph(spark, RMAT_W)
     if edges_df.where("w < 0").count() > 0:

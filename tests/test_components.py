@@ -27,8 +27,8 @@ def _cc_check(mk_graph, edges, **kw):
 
 
 def test_cc_plain_hash_min_ligra_semantics(mk_graph):
-    # contract=False, jumps=0: the exact Components.C iteration scheme
-    _cc_check(mk_graph, TWO_COMPONENTS + [(0, 10)], contract=False, jumps=0)
+    # the Components.C min-id fixpoint across two cliques joined by an edge
+    _cc_check(mk_graph, TWO_COMPONENTS + [(0, 10)])
 
 
 def test_cc_two_components(mk_graph):
@@ -37,10 +37,6 @@ def test_cc_two_components(mk_graph):
 
 def test_cc_chain(mk_graph):
     _cc_check(mk_graph, CHAIN_64)
-
-
-def test_cc_chain_shortcut(mk_graph):
-    _cc_check(mk_graph, CHAIN_64, shortcut=True)
 
 
 def test_cc_star(mk_graph):

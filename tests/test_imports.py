@@ -24,7 +24,6 @@ PUBLIC_MODULES = [
     "ligra_spark.plans",
     "ligra_spark.graph",
     "ligra_spark.hypergraph",
-    "ligra_spark.csr",
     "ligra_spark.checkpoint",
     "ligra_spark.queries",
     "ligra_spark.session",

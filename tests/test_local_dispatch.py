@@ -2,9 +2,10 @@
 
 Small graphs (m ≤ LIGRA_LOCAL_GRAPH_EDGES) route the iterative
 fixpoints through the closed.py kernels over a single-partition view
-(graph.local_view()). These tests pin: (1) the dispatch produces
-results identical to the distributed fixpoints it replaces, (2) the
-env kill-switch (=0) really forces the distributed path."""
+(graph.local_view()); ``algorithms._tier.resolve_tier`` decides. These
+tests pin: (1) the dispatch produces results identical to the
+distributed fixpoints it replaces, (2) the env kill-switch (=0) really
+forces the distributed path."""
 
 from __future__ import annotations
 
@@ -85,15 +86,15 @@ def test_asymmetric_cc_never_dispatches(mk_graph):
 
 
 def test_dispatch_threshold_respects_env(mk_graph, monkeypatch):
-    from ligra_spark.graph import Graph  # noqa: F401
+    from ligra_spark.algorithms._tier import resolve_tier
 
     g = mk_graph(CHAIN_64)
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
-    assert not g.fits_local_kernel()
+    assert resolve_tier(g, "pagerank").tier == "distributed"
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "63")
-    assert g.fits_local_kernel()
+    assert resolve_tier(g, "pagerank").tier == "local"
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "62")
-    assert not g.fits_local_kernel()
+    assert resolve_tier(g, "pagerank").tier == "distributed"
 
 
 def test_triangle_parallel_local_random_graph(mk_graph, monkeypatch):

@@ -1,12 +1,18 @@
-"""Operator-level contracts: edge_map_count semantics (both grouping
-sides), pack_edges, vertex_map/vertex_filter."""
+"""Operator-level contracts: edge_map destination membership on both
+plans, edge_map_count semantics (both grouping sides), pack_edges,
+vertex_map/vertex_filter."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ligra_spark.graph import Graph
-from ligra_spark.operators import edge_map_count, vertex_filter, vertex_map
+from ligra_spark.operators import (
+    edge_map,
+    edge_map_count,
+    vertex_filter,
+    vertex_map,
+)
 
 # star: 0 -> 1,2,3 ; chain: 1 -> 2 -> 3 ; weights = dst
 EDGES = [(0, 1, 1.0), (0, 2, 2.0), (0, 3, 3.0), (1, 2, 2.0), (2, 3, 3.0)]
@@ -17,6 +23,33 @@ def _g(spark):
         spark.createDataFrame(EDGES, "src long, dst long, w double"),
         num_partitions=2,
     )
+
+
+def test_edge_map_zero_share_destinations(spark):
+    """A destination whose messages sum to exactly 0.0 (zero shares, or
+    cancelling +x/-x) must still be emitted — 'one row per destination
+    that received at least one message' is membership, not value."""
+    # dst 1 gets 0.0 from src 5; dst 2 gets +3 and -3 (cancel); dst 3
+    # gets 1.0 (control)
+    g = Graph(
+        spark.createDataFrame(
+            [(5, 1), (6, 2), (7, 2), (8, 3)], "src long, dst long"
+        ),
+        num_partitions=2,
+    )
+    frontier = spark.createDataFrame(
+        [(5, 0.0), (6, 3.0), (7, -3.0), (8, 1.0)], "id long, x double"
+    )
+    for direction in ("broadcast", "shuffle"):
+        got = {
+            r["id"]: r["msg"]
+            for r in edge_map(
+                g, frontier, message=F.col("x"), combiner="sum",
+                direction=direction,
+            ).collect()
+        }
+        assert got == {1: 0.0, 2: 0.0, 3: 1.0}, direction
+    g.unpersist()
 
 
 def test_edge_map_count_by_src_filters_predicate(spark):

@@ -69,7 +69,7 @@ def test_bellman_ford_shortcut_wins(mk_graph):
     g.unpersist()
 
 
-@pytest.mark.skipif(not os.path.exists(RMAT), reason="reference inputs absent")
+@pytest.mark.skipif(not os.path.exists(RMAT), reason=f"golden input {RMAT} absent")
 def test_golden_rmat_parity(spark):
     """The reference's own golden input (n=128, m=708): PageRank 1e-6,
     CC/TC exact, BFS levels exact."""
@@ -95,7 +95,7 @@ def test_golden_rmat_parity(spark):
     g.unpersist()
 
 
-@pytest.mark.skipif(not os.path.exists(RMAT_W), reason="reference inputs absent")
+@pytest.mark.skipif(not os.path.exists(RMAT_W), reason=f"golden input {RMAT_W} absent")
 def test_golden_rmat_weighted_bellman_ford(spark):
     edges_df = read_adjacency_graph(spark, RMAT_W)
     rows = edges_df.collect()
@@ -111,30 +111,63 @@ def test_golden_rmat_weighted_bellman_ford(spark):
     g.unpersist()
 
 
-def test_binary_graph_roundtrip(spark, tmp_path):
-    """Binary .config/.adj/.idx reader (IO.h:318-371): round-trips the
-    golden text fixture byte-for-byte at the edge-list level."""
+def _pbbs_fixture(tmp_path, weighted: bool) -> tuple[str, list]:
+    """A PBBS AdjacencyGraph text file built from the deterministic
+    R-MAT generator at the golden rMat's size (n=128, m=708), with
+    integer weights in [1, 7] for the weighted twin. Returns the path
+    and the generated edge rows."""
+    from ligra_spark.sources import write_adjacency_graph
+    from ligra_spark.sources.rmat import rmat_edges
+
+    e = rmat_edges(7, 708, seed=5)
+    w = np.arange(len(e), dtype=np.int64) % 7 + 1 if weighted else None
+    path = str(tmp_path / ("rmat_w.adj" if weighted else "rmat.adj"))
+    write_adjacency_graph(path, e[:, 0], e[:, 1], w, n=128)
+    rows = e.tolist() if w is None else np.column_stack([e, w]).tolist()
+    return path, sorted(map(tuple, rows))
+
+
+def _binary_roundtrip(spark, tmp_path, text_path: str) -> list:
+    """Binary .config/.adj/.idx reader (IO.h:318-371): a PBBS text graph
+    written as binary and read back gives the same edge list, weights
+    included. Returns the parsed text edges."""
     from ligra_spark.sources import read_binary_graph, write_binary_graph
     from ligra_spark.sources.adjacency import parse_adjacency_file
 
-    src, dst, _ = parse_adjacency_file(RMAT)
+    src, dst, w = parse_adjacency_file(text_path)
     prefix = str(tmp_path / "g")
-    write_binary_graph(prefix, src, dst)
-    df = read_binary_graph(spark, prefix)
-    got = sorted((r["src"], r["dst"]) for r in df.collect())
-    assert got == sorted(zip(src.tolist(), dst.tolist()))
+    write_binary_graph(prefix, src, dst, w)
+    df = read_binary_graph(spark, prefix, weighted=w is not None)
+    if w is None:
+        want = sorted(zip(src.tolist(), dst.tolist()))
+        got = sorted((r["src"], r["dst"]) for r in df.collect())
+    else:
+        want = sorted(zip(src.tolist(), dst.tolist(), [float(int(x)) for x in w]))
+        got = sorted((r["src"], r["dst"], r["w"]) for r in df.collect())
+    assert got == want
+    return want
+
+
+def test_binary_graph_roundtrip(spark, tmp_path):
+    path, rows = _pbbs_fixture(tmp_path, weighted=False)
+    assert _binary_roundtrip(spark, tmp_path, path) == rows
+    assert len(rows) == 708
 
 
 def test_binary_graph_roundtrip_weighted(spark, tmp_path):
-    from ligra_spark.sources import read_binary_graph, write_binary_graph
-    from ligra_spark.sources.adjacency import parse_adjacency_file
+    path, rows = _pbbs_fixture(tmp_path, weighted=True)
+    assert _binary_roundtrip(spark, tmp_path, path) == rows
+    assert {r[2] for r in rows} == set(range(1, 8))
 
-    src, dst, w = parse_adjacency_file(RMAT_W)
-    prefix = str(tmp_path / "gw")
-    write_binary_graph(prefix, src, dst, w)
-    df = read_binary_graph(spark, prefix, weighted=True)
-    got = sorted((r["src"], r["dst"], r["w"]) for r in df.collect())
-    assert got == sorted(zip(src.tolist(), dst.tolist(), [float(int(x)) for x in w]))
+
+@pytest.mark.skipif(not os.path.exists(RMAT), reason=f"golden input {RMAT} absent")
+def test_binary_graph_roundtrip_golden(spark, tmp_path):
+    assert len(_binary_roundtrip(spark, tmp_path, RMAT)) == 708
+
+
+@pytest.mark.skipif(not os.path.exists(RMAT_W), reason=f"golden input {RMAT_W} absent")
+def test_binary_graph_roundtrip_golden_weighted(spark, tmp_path):
+    assert _binary_roundtrip(spark, tmp_path, RMAT_W)
 
 
 def test_snap_reader(spark, tmp_path):
