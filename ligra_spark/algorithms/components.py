@@ -9,25 +9,31 @@ re-enters the frontier iff its label changed this round
 vertex id of its component** — an exact, deterministic output.
 
 Acceleration (identical fixpoint, far fewer rounds), both in every
-round of the distributed loop:
+round of the distributed loop on a symmetric graph. On a directed one a
+label need not name a vertex of its holder's component, so each vertex
+is its own group and there is no hop: plain hash-min, where a vertex
+ends with the min id among the vertices that reach it.
 
 - **group-min contraction**: every vertex whose *old* label was L
-  adopts the best label discovered by anyone in L's group this round
-  (``groupBy(comp).min`` + join back) — the star-contraction idea from
-  the MapReduce-WCC literature. Plain hash-min needs O(diameter) rounds
-  (ruinous on 10^12-turn conversation chains, where per-round Spark job
-  overhead dominates); contraction empirically converges in O(log)
-  rounds on the transcript graphs (6 rounds vs 40 at sf0.01) and each
-  extra step is label-table-sized, never edge-sized.
-- **two pointer-jump hops** (``IDs[i] = IDs[IDs[i]]``,
-  Components-Shortcut.C:30-42); hops are materialized individually — a
-  lazily chained k-hop plan would embed 2^k copies of the relax subplan
-  (each self-join doubles the tree). Measured on the sf0.1 events
-  chains at local[32]: one hop 7 rounds / 7.3s, two hops 5 rounds /
-  6.8s, three hops 4 rounds / 6.1s — but each hop is an extra
-  vertex-sized materialization per round, and short-diameter graphs
-  (rMat: 4 rounds at any hop count) pay it for nothing, so two is the
-  balance.
+  adopts the best label anyone in L's group received this round — the
+  star-contraction idea from the MapReduce-WCC literature; O(log)
+  rounds on the transcript chains where plain hash-min needs
+  O(diameter) (6 vs 40 at sf0.01). Only improving messages (``msg <
+  comp``) are grouped into ``gmin`` and joined back on the label; no
+  member's own improvement beats ``gmin``, so the new label is
+  ``least(comp, gmin)``: one join over the messages, none over the
+  full vertex table.
+- **one pointer-jump hop** (``IDs[i] = IDs[IDs[i]]``,
+  Components-Shortcut.C:30-42), checkpointed on its own (chained
+  lazily, the self-join would copy the contraction plan into both
+  sides) with the frontier count riding that checkpoint's action.
+
+Two checkpoints per round, down from three with two hops. Measured on
+4 vCPUs: on the ``transcripts_closed`` benchmark graph (``local[4,4]``)
+still 6 rounds, with Spark jobs 116→77, shuffle read 66→38 MiB and call
+wall 12.5→8.1 s; on 200 random-id chains of 250 vertices
+(``local[4]``) 8 rounds instead of 7, but 102 jobs instead of 141 and
+8.4-9.7 s instead of 10.2-13.5 s.
 
 Schedules only change round counts; the final labels are the
 Components.C fixpoint either way.
@@ -42,9 +48,6 @@ from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpers
 from ligra_spark.algorithms._tier import resolve_tier
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
-
-# pointer-jump hops per round (module docstring)
-JUMPS = 2
 
 
 def connected_components(
@@ -78,6 +81,9 @@ def connected_components(
         )
 
         return connected_components_closed(view, metrics=metrics)
+    symmetric = symmetrize or graph.symmetric
+    # a directed graph's group is each vertex alone (module docstring)
+    group = "comp" if symmetric else "id"
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
     state = g.vertices.select("id", F.col("id").alias("comp"))
@@ -89,6 +95,7 @@ def connected_components(
     state = materialize(state)
     frontier = state
     frontier_n = g.n
+    changed = F.col("comp_new") < F.col("comp")
 
     timer = Timer()
     for it in range(start_iter, max_iters):
@@ -99,40 +106,32 @@ def connected_components(
             combiner="min",
             frontier_size=frontier_n,
         )
-        nxt = state.join(msgs, "id", "left").select(
-            "id",
-            "comp",
-            F.least("comp", F.coalesce("msg", "comp")).alias("comp_new"),
+        # contraction: the best improving message per group
+        imp = (
+            state.join(msgs, "id")
+            .where(F.col("msg") < F.col("comp"))
+            .groupBy(group)
+            .agg(F.min("msg").alias("gmin"))
         )
-        grp = nxt.groupBy("comp").agg(F.min("comp_new").alias("gmin"))
-        nxt = nxt.join(grp, "comp").select(
-            "id", "comp", F.least("comp_new", "gmin").alias("comp_new")
+        nxt = state.join(imp, group, "left").select(
+            "id", "comp", F.least("comp", "gmin").alias("comp_new")
         )
-        nxt = materialize(nxt, state)
-        # The frontier count rides the round's LAST materialization
-        # action, the final jump, as an observed metric (one driver job
-        # per round instead of two).
-        obs = Observation(f"cc_frontier_{it}")
-        for j in range(JUMPS):
+        prev = state
+        if symmetric:
+            prev = nxt = materialize(nxt, state)
             hop = nxt.select(
                 F.col("id").alias("comp_new"), F.col("comp_new").alias("comp2")
             )
-            jumped = nxt.join(hop, "comp_new", "left").select(
-                "id",
-                "comp",
-                F.coalesce("comp2", "comp_new").alias("comp_new"),
+            nxt = nxt.join(hop, "comp_new", "left").select(
+                "id", "comp", F.coalesce("comp2", "comp_new").alias("comp_new")
             )
-            if j == JUMPS - 1:
-                jumped = jumped.observe(
-                    obs,
-                    F.sum(
-                        (F.col("comp_new") < F.col("comp")).cast("long")
-                    ).alias("frontier_n"),
-                )
-            nxt = materialize(jumped, nxt)
-        frontier = nxt.where(F.col("comp_new") < F.col("comp")).select(
-            "id", F.col("comp_new").alias("comp")
+        # the frontier count rides the round's last materialization
+        obs = Observation(f"cc_frontier_{it}")
+        nxt = materialize(
+            nxt.observe(obs, F.sum(changed.cast("long")).alias("frontier_n")),
+            prev,
         )
+        frontier = nxt.where(changed).select("id", F.col("comp_new").alias("comp"))
         frontier_n = int(obs.get["frontier_n"] or 0)
         state = nxt.select("id", F.col("comp_new").alias("comp"))
         state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)

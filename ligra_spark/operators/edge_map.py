@@ -21,12 +21,14 @@ choice:
   zero-shuffle iteration. (Cost: a full scan of the cached columnar
   edge table, which whole-stage codegen makes cheap.)
 - **dense / co-partitioned plan** (``'shuffle'``, large or
-  whole-vertex frontier): join frontier state (hash-partitioned on
-  ``id`` — which iteration output already is, since it came out of a
-  ``groupBy(dst)``) against the ``src``-partitioned edge table
-  exchange-free, then shuffle only the partially-aggregated messages
-  into ``groupBy(dst)``. One bounded exchange per iteration; the edge
-  table never moves.
+  whole-vertex frontier): join the frontier against the
+  ``src``-partitioned edge table, then shuffle only the
+  partially-aggregated messages into ``groupBy(dst)``. Loop state
+  comes out of ``materialize``, which rebuilds it over its checkpointed
+  RDD, so Spark knows nothing of its partitioning: the frontier is
+  exchanged on ``src`` to meet the cached edge table, or, when AQE
+  finds a side under the broadcast threshold (the edge table of the
+  transcript benchmark graph), that side is broadcast instead.
 
 Skew: hub destinations are handled by Spark's partial (map-side)
 aggregation — each task pre-combines its messages per ``dst`` before the

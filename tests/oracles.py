@@ -4,7 +4,8 @@ kernels (math reproduced from the cited lines, no code copied):
 - pagerank: damping 0.85, init 1/n, L1 < tol stop, **no dangling
   redistribution** (PageRank.C:33-40 never redistributes sink mass).
 - connected components: fixpoint label = min vertex id per undirected
-  component (hash-min LP fixpoint, Components.C:26-41).
+  component (hash-min LP fixpoint, Components.C:26-41); on a directed
+  edge set, min id among the vertices that reach each vertex.
 - label propagation: synchronous most-frequent-neighbor-label rounds,
   min-label tie-break.
 - triangles: exact count over the simple undirected graph
@@ -76,6 +77,27 @@ def components_oracle(edges, vertices=()) -> dict[int, int]:
         r = find(v)
         comp_min[r] = min(comp_min.get(r, v), v)
     return {v: comp_min[find(v)] for v in vs}
+
+
+def directed_components_oracle(edges) -> dict[int, int]:
+    """Directed hash-min fixpoint (Components.C run on an asymmetric
+    edge set): each vertex ends with the minimum id among the vertices
+    that reach it along directed edges, itself included."""
+    vs = _vertices(edges)
+    out = defaultdict(list)
+    for s, d in edges:
+        out[s].append(d)
+    label = {v: v for v in vs}
+    for u in vs:
+        seen = {u}
+        todo = [u]
+        while todo:
+            for w in out[todo.pop()]:
+                if w not in seen:
+                    seen.add(w)
+                    label[w] = min(label[w], u)
+                    todo.append(w)
+    return label
 
 
 def label_propagation_oracle(edges, max_iters=20, vertices=()) -> dict[int, int]:

@@ -3,6 +3,10 @@ vs oracles (BASELINE.json: components/triangles/labels exact)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
+
 from conftest import CHAIN_64, K4, SELF_LOOPS_DUPS, STAR_HUB, TWO_COMPONENTS
 from ligra_spark.algorithms import (
     connected_components,
@@ -13,6 +17,7 @@ from ligra_spark.algorithms import (
 )
 from oracles import (
     components_oracle,
+    directed_components_oracle,
     kcore_oracle,
     label_propagation_oracle,
     triangle_count_oracle,
@@ -20,9 +25,20 @@ from oracles import (
 
 
 def _cc_check(mk_graph, edges, **kw):
+    """Both tiers against the oracle. These graphs sit under the
+    whole-graph cap, so the default runs the local kernel; cap 0 runs
+    the distributed loop."""
     g = mk_graph(edges)
-    got = {r["id"]: r["comp"] for r in connected_components(g, **kw).collect()}
-    assert got == components_oracle(edges)
+    want = components_oracle(edges)
+    for tier in ("local", "distributed"):
+        with pytest.MonkeyPatch.context() as mp:
+            if tier == "distributed":
+                mp.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
+            else:
+                mp.delenv("LIGRA_LOCAL_GRAPH_EDGES", raising=False)
+            out = connected_components(g, **kw)
+            got = {r["id"]: r["comp"] for r in out.collect()}
+        assert got == want, tier
     g.unpersist()
 
 
@@ -45,6 +61,70 @@ def test_cc_star(mk_graph):
 
 def test_cc_self_loops_dups(mk_graph):
     _cc_check(mk_graph, SELF_LOOPS_DUPS)
+
+
+def test_cc_random_id_chains(mk_graph):
+    # 20 chains of 50 vertices with permuted ids and random edge
+    # directions: labels must travel both ways along every chain
+    rng = random.Random(5)
+    ids = rng.sample(range(1_000_000), 20 * 50)
+    edges = []
+    for c in range(20):
+        chain = ids[c * 50:(c + 1) * 50]
+        for a, b in zip(chain, chain[1:]):
+            edges.append((a, b) if rng.random() < 0.5 else (b, a))
+    _cc_check(mk_graph, edges)
+
+
+def test_cc_directed_hash_min(mk_graph):
+    """``symmetrize=False`` on an asymmetric graph is Components.C's
+    directed hash-min: each vertex ends with the min id among the
+    vertices that reach it. Nothing reaches 5, and only 5 reaches 7,
+    although 6 (labelled 5 in round one) later receives 1 from 8."""
+    edges = [(5, 6), (5, 7), (1, 8), (8, 6)]
+    assert directed_components_oracle(edges) == {1: 1, 5: 5, 6: 1, 7: 5, 8: 1}
+    rng = random.Random(3)
+    rand = [(rng.randrange(40), rng.randrange(40)) for _ in range(60)]
+    for es in (edges, rand):
+        g = mk_graph(es)
+        out = connected_components(g, symmetrize=False)
+        got = {r["id"]: r["comp"] for r in out.collect()}
+        assert got == directed_components_oracle(es)
+        g.unpersist()
+
+
+def test_cc_round_budget(spark, monkeypatch):
+    """The distributed round checkpoints at most twice: once after the
+    contraction, once after the pointer hop that carries the frontier
+    count. A closed graph always takes the distributed loop."""
+    from ligra_spark.algorithms import components
+    from ligra_spark.algorithms._iter import IterMetrics
+    from ligra_spark.graph import Graph
+    from ligra_spark.sources import derive_edges, generate_transcripts
+
+    t = generate_transcripts(spark, 100, distributed=False)
+    g = Graph(
+        derive_edges(t, closure_key=True), closure_key="ckey", num_partitions=4
+    )
+    calls = []
+    real = components.materialize
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(components, "materialize", counting)
+    m = IterMetrics()
+    got = {
+        r["id"]: r["comp"]
+        for r in components.connected_components(g, metrics=m).collect()
+    }
+    edges = [(r["src"], r["dst"]) for r in g.edges_by_src.collect()]
+    assert got == components_oracle(edges)
+    assert m.iterations > 1
+    # one more for the initial state, before the first round
+    assert len(calls) <= 2 * m.iterations + 1
+    g.unpersist()
 
 
 def test_lp_two_components(mk_graph):
